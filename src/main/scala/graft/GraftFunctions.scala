@@ -41,7 +41,7 @@ object GraftFunctions {
     registry.createOrReplaceTempFunction("weighted_quantile", exprs => {
       require(exprs.length == 3, "weighted_quantile(value, weight, q)")
       WeightedQuantile(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
-        literalDouble(exprs(2)))
+        Seq(literalDouble(exprs(2))))
     }, "built-in")
     registry.createOrReplaceTempFunction("approx_weighted_quantile", exprs => {
       require(exprs.length == 3 || exprs.length == 4,

@@ -41,13 +41,16 @@ object Plans {
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
           System.err.println(s"[plans] wrote $name")
-        } catch { case e: Throwable =>
+        } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[plans] $name failed: ${e.getMessage}")
         }
         try (sc.getPersistentRDDs.keySet.toSet -- before)
           .foreach(id => sc.getPersistentRDDs.get(id)
             .foreach(_.unpersist(blocking = false)))
-        catch { case _: Throwable => }
+        catch { case scala.util.control.NonFatal(e) =>
+          // a pin left resident skews every later query: say so
+          System.err.println(s"[plans] $name: unpersist failed: $e")
+        }
       }
     }
     spark.stop()

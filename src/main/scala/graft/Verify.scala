@@ -32,13 +32,16 @@ object Verify {
         val before = sc.getPersistentRDDs.keySet.toSet
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
         try (sc.getPersistentRDDs.keySet.toSet -- before)
           .foreach(id => sc.getPersistentRDDs.get(id)
             .foreach(_.unpersist(blocking = false)))
-        catch { case _: Throwable => }
+        catch { case scala.util.control.NonFatal(e) =>
+          // a pin left resident skews every later query: say so
+          System.err.println(s"[verify] $name: unpersist failed: $e")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -57,8 +57,8 @@ final class WQSketch(val maxBins: Int, var cs: Array[Double],
 }
 
 /** Approximate weighted quantile with bounded state — the 100 TB companion
-  * of [[WeightedQuantile]] (whose buffer is exact but grows with the
-  * group). State is a `maxBins`-bin weighted streaming histogram, so any
+  * of [[WeightedQuantile]] (whose map is exact but grows with the group's
+  * distinct values). State is a `maxBins`-bin weighted streaming histogram, so any
   * group size aggregates in O(maxBins) memory; the quantile applies the
   * same reference position convention `p = q·(Σw − 1)` + linear
   * interpolation over the bins ([[WeightedQuantile]] semantics,

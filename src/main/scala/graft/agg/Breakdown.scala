@@ -49,47 +49,48 @@ object Breakdown {
         .distinct()
         .orderBy(keys.map(r => col(r.outName)): _*)
     }
-    // FUSION: n unweighted exact-quantile ops on the same variable become
-    // ONE percentile(x, array(q…)) aggregate. Spark's Percentile is a
-    // TypedImperativeAggregate buffering every group value — five separate
-    // q1/q2/q3/p10/p90 aggregates buffer (and merge, and sort) the column
-    // five times; the array form buffers it once and sorts once
-    // (q04: 6.1 s → one-buffer cost). Results are identical: the same
-    // interpolation on the same buffer, element-projected back per alias.
+    // FUSION: n ≥ 2 exact-quantile ops on the same variable AND the same
+    // weight set become ONE aggregate over an array of q's —
+    // `percentile(x, array(q…))` unweighted, `WeightedQuantile(x, w, q…)`
+    // weighted. Both keep one map per group (value → count / summed
+    // weight): five separate q1/q2/q3/p10/p90 aggregates buffer (and
+    // serialize, merge and sort) the column five times; the array form does
+    // it once (q04: 6.1 s → one-buffer cost; the reserves quant spec's
+    // weighted q1/q2/q3 read one map instead of three). Results are
+    // identical: the same interpolation on the same state, element-projected
+    // back per alias. The key is (variable, the existing weight columns the
+    // op multiplies, in spec order): pNN ignores weights, so it keys with
+    // the unweighted q's; a weighted and an unweighted q, or two weight
+    // sets, never share a buffer.
     val colsSet = df.columns.toSet
-    def exactQuantile(r: SpecRow): Option[Double] = {
-      val op = r.op
-      if (op == "text" || r.weights.exists(colsSet.contains) ||
-        !colsSet.contains(r.variable)) None
-      else op match {
-        case "q1" | "q2" | "q3" =>
-          Some(("q1q2q3".indexOf(op) / 2 + 1) * 0.25)
-        case p if p.startsWith("p") && p.drop(1).nonEmpty &&
-            p.drop(1).forall(_.isDigit) =>
-          Some(p.drop(1).toDouble / 100.0)
+    def exactQuantile(r: SpecRow): Option[((String, Seq[String]), Double)] =
+      if (r.op == "text" || !colsSet.contains(r.variable)) None
+      else r.op match {
+        case op @ ("q1" | "q2" | "q3") =>
+          Some((r.variable, r.weights.filter(colsSet.contains)) -> quartile(op))
+        case p if isPercentile(p) =>
+          Some((r.variable, Seq.empty[String]) -> p.drop(1).toDouble / 100.0)
         case _ => None
       }
-    }
-    val fusable: Map[String, Map[Double, Int]] = aggs0
-      .flatMap(r => exactQuantile(r).map(q => r.variable -> q))
-      .groupBy(_._1).filter(_._2.size >= 2)
-      .map { case (v, vqs) =>
-        v -> vqs.map(_._2).distinct.sorted.zipWithIndex.toMap
+    val quantRows = aggs0.flatMap(exactQuantile)
+    val fusedKeys = quantRows.map(_._1).distinct
+      .filter(key => quantRows.count(_._1 == key) >= 2)
+    val fusedQs = fusedKeys.map(key =>
+      key -> quantRows.filter(_._1 == key).map(_._2).distinct.sorted).toMap
+    def fusedOf(r: SpecRow): Option[(String, Int)] =
+      exactQuantile(r).flatMap { case (key, q) =>
+        val i = fusedKeys.indexOf(key)
+        if (i < 0) None else Some((s"_qfuse_$i", fusedQs(key).indexOf(q)))
       }
-    val fuseName = fusable.keys.toSeq.sorted.zipWithIndex
-      .map { case (v, i) => v -> s"_qfuse_$i" }.toMap
-    def fusedOf(r: SpecRow): Option[(String, Int)] = for {
-      q <- exactQuantile(r)
-      qs <- fusable.get(r.variable)
-      i <- qs.get(q)
-    } yield (fuseName(r.variable), i)
 
     val plainAggCols = aggs0.filter(fusedOf(_).isEmpty)
       .map(r => aggCol(df, r).as(r.outName))
-    val fusedAggCols = fusable.toSeq.sortBy(_._1).map { case (v, qs) =>
-      val xv = nanvl(col(v).cast(DoubleType), lit(null).cast(DoubleType))
-      val percentages = array(qs.toSeq.sortBy(_._2).map(p => lit(p._1)): _*)
-      percentile(xv, percentages).as(fuseName(v))
+    val fusedAggCols = fusedKeys.zipWithIndex.map { case (key @ (v, wts), i) =>
+      val qs = fusedQs(key)
+      val agg =
+        if (wts.isEmpty) percentile(masked(v), array(qs.map(lit): _*))
+        else WeightedQuantile(masked(v), weightProduct(wts), qs)
+      agg.as(s"_qfuse_$i")
     }
     val aggCols = plainAggCols ++ fusedAggCols
     val finalCols =
@@ -127,18 +128,31 @@ object Breakdown {
   private val pandasOps =
     Set("count", "sum", "mean", "min", "max", "var", "std", "sem")
 
+  /** q1/q2/q3 → 0.25/0.5/0.75. */
+  private def quartile(op: String): Double = ("q1q2q3".indexOf(op) / 2 + 1) * 0.25
+
+  /** `pNN`: the exact percentile NN/100. */
+  private def isPercentile(op: String): Boolean =
+    op.startsWith("p") && op.drop(1).nonEmpty && op.drop(1).forall(_.isDigit)
+
+  // NaN inputs behave like pandas skipna everywhere: mask NaN → null so
+  // count() skips it, avg() ignores it, and max() doesn't rank it greatest
+  // (NaN sorts above all doubles in Spark). The weighted ops mask NaN
+  // independently; this makes the unweighted ops agree.
+  private def masked(v: String): Column =
+    nanvl(col(v).cast(DoubleType), lit(null).cast(DoubleType))
+
+  /** Product of the weight columns (callers mask NaN where needed). */
+  private def weightProduct(wts: Seq[String]): Column =
+    wts.map(w => col(w).cast(DoubleType)).reduce(_ * _)
+
   private def aggCol(df: DataFrame, r: SpecRow): Column = {
     val cols = df.columns.toSet
     // weights are silently filtered to existing columns (bm_breakdown.py:199-203)
     val wts = r.weights.filter(cols.contains)
     val op = r.op
-    // NaN inputs behave like pandas skipna everywhere: mask NaN → null so
-    // count() skips it, avg() ignores it, and max() doesn't rank it greatest
-    // (NaN sorts above all doubles in Spark). The weighted ops below mask
-    // NaN independently; this makes the unweighted ops agree.
-    def x: Column = nanvl(col(r.variable).cast(DoubleType), lit(null).cast(DoubleType))
-    // product of all weight columns, NaN→0 like np.nan_to_num where needed
-    def wprod: Column = wts.map(w => col(w).cast(DoubleType)).reduce(_ * _)
+    def x: Column = masked(r.variable)
+    def wprod: Column = weightProduct(wts)
 
     if (op == "text") {
       // constant column from the raw 3rd cell, else the var name
@@ -168,12 +182,11 @@ object Breakdown {
         val num = sum(when(x.isNotNull, x * w0).otherwise(lit(0.0)))
         when(den =!= 0.0, num / den)
       case "q1" | "q2" | "q3" if wts.nonEmpty =>
-        val q = ("q1q2q3".indexOf(op) / 2 + 1) * 0.25
-        WeightedQuantile(x, wprod, q)
+        WeightedQuantile(x, wprod, quartile(op))
       case "aq1" | "aq2" | "aq3" =>
         // beyond-reference: bounded-state quantile sketch for unbounded
         // groups (ApproxWeightedQuantile Scaladoc); weightless → w ≡ 1
-        val q = ("q1q2q3".indexOf(op.drop(1)) / 2 + 1) * 0.25
+        val q = quartile(op.drop(1))
         ApproxWeightedQuantile(x, if (wts.nonEmpty) wprod else lit(1.0), q, 256)
       case p if p.startsWith("ap") && p.drop(2).nonEmpty &&
           p.drop(2).forall(_.isDigit) =>
@@ -203,11 +216,9 @@ object Breakdown {
       case "std" => stddev_samp(x)
       case "sem" => stddev_samp(x) / sqrt(count(x)) // std/√n (ddof=1)
       case "q1" | "q2" | "q3" =>
-        val q = ("q1q2q3".indexOf(op) / 2 + 1) * 0.25
-        percentile(x, lit(q)) // pandas linear interpolation ≡ Spark percentile
+        percentile(x, lit(quartile(op))) // pandas linear interpolation ≡ Spark percentile
       case "major" => MajorAgg(col(r.variable), df.schema(r.variable).dataType)
-      case p if p.startsWith("p") && p.drop(1).nonEmpty &&
-          p.drop(1).forall(_.isDigit) =>
+      case p if isPercentile(p) =>
         percentile(x, lit(p.drop(1).toDouble / 100.0)) // bm_breakdown.py:241-242
       case _ =>
         max(lit(null).cast(DoubleType)) // unknown op → null (v stays NaN)

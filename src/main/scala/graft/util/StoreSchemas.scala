@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.StructType
   * append reuses the write schema by construction. Metadata only;
   * every read still scans the parquet bytes.
   *
-  * WRITE-ONCE ASSUMPTION (the Tables note): a store REWRITTEN at the
-  * same path with a different schema within one JVM must
-  * [[clear]] first — no code in this repo does that (store paths are
-  * per-application, writers Overwrite with the same schema). */
+  * A writer that Overwrites a store path calls [[invalidate]] on it (the
+  * `Pq`/`Ivf` store writers do), so a path rewritten with a different
+  * column set in the same JVM is read with the new schema, not the stale
+  * one (which would null out new columns and drop others silently). */
 object StoreSchemas {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
@@ -29,7 +29,6 @@ object StoreSchemas {
     spark.read.schema(sch).parquet(path)
   }
 
-  /** Drop every cached schema (a path about to be rewritten with a
-    * different layout). */
-  def clear(): Unit = cache.clear()
+  /** Forget `path`'s cached schema: its writer is replacing the files. */
+  def invalidate(path: String): Unit = cache.remove(path)
 }

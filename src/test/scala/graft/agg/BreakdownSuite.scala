@@ -155,6 +155,61 @@ class BreakdownSuite extends AnyFunSuite {
     assert(out(0).getLong(0) == 4L)
     assert(out(0).getDouble(1) == 42.0)
   }
+
+  // integer values with ties, dyadic weights (exact sums), null/NaN holes
+  private lazy val qdf = {
+    val rnd = new scala.util.Random(11)
+    def hole(x: Double): Option[Double] = rnd.nextInt(20) match {
+      case 0 => None
+      case 1 => Some(Double.NaN)
+      case _ => Some(x)
+    }
+    Seq.fill(400)((s"g${rnd.nextInt(3)}", hole(rnd.nextInt(25).toDouble),
+      hole(rnd.nextInt(9) / 4.0), hole(rnd.nextInt(5).toDouble)))
+      .toDF("k", "v", "w1", "w2")
+  }
+
+  /** The WeightedQuantile aggregates in a report's analyzed plan. */
+  private def weightedQuantiles(out: org.apache.spark.sql.DataFrame) =
+    out.queryExecution.analyzed.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+        a.aggregateExpressions.flatMap(_.collect { case w: WeightedQuantile => w })
+    }.flatten
+
+  /** Column `name` of a one-aggregate spec, by group key. */
+  private def single(spec: String, name: String): Map[String, Any] =
+    Breakdown(qdf.coalesce(1), spec).collect()
+      .map(r => r.getString(0) -> r.getAs[Any](name)).toMap
+
+  test("fused weighted q1/q2/q3 equal three single-q specs column for column") {
+    val fused = Breakdown(qdf.repartition(8),
+      "k;v=a,q1,w1,w2;v=b,q2,w1,w2;v=c,q3,w1,w2;v=d,q2,w1,w2")
+    val wqs = weightedQuantiles(fused)
+    assert(wqs.map(w => (w.qs, w.returnArray)) == Seq((Seq(0.25, 0.5, 0.75), true)))
+    val rows = fused.collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("g0", "g1", "g2"))
+    for ((name, op) <- Seq("a" -> "q1", "b" -> "q2", "c" -> "q3", "d" -> "q2")) {
+      val want = single(s"k;v=$name,$op,w1,w2", name)
+      rows.foreach(r => assert(r.getAs[Any](name) == want(r.getString(0)), s"$name ${r.getString(0)}"))
+    }
+  }
+
+  test("two weight sets, or a weighted and an unweighted q, never share a buffer") {
+    val spec = "k;v=a,q1,w1;v=b,q3,w1;v=c,q1,w2;v=d,q3,w2;v=e,q2;v=f,p90,w1;v=g,q3,w1,w2"
+    val out = Breakdown(qdf.repartition(8), spec)
+    // one array aggregate per weight set with ≥ 2 q's; the lone (w1, w2)
+    // q3 stays scalar; q2 and p90 (pNN ignores weights) fuse unweighted
+    val wqs = weightedQuantiles(out)
+      .map(w => (w.right.references.map(_.name).toSeq.sorted, w.qs, w.returnArray))
+    assert(wqs.toSet == Set((Seq("w1"), Seq(0.25, 0.75), true),
+      (Seq("w2"), Seq(0.25, 0.75), true), (Seq("w1", "w2"), Seq(0.75), false)))
+    val rows = out.collect()
+    for (cell <- spec.split(';').tail) {
+      val name = cell.split(',')(0).split('=')(1)
+      val want = single(s"k;$cell", name)
+      rows.foreach(r => assert(r.getAs[Any](name) == want(r.getString(0)), s"$cell ${r.getString(0)}"))
+    }
+  }
 }
 
 class WeightedQuantileSuite extends AnyFunSuite {
@@ -186,6 +241,98 @@ class WeightedQuantileSuite extends AnyFunSuite {
     // a=[1,2,3], w=[0.5,0.25,0.25]: S=1.0, p=q*(S-1)=0 → ecdf=[.5,.75,1.0]
     // lo=ssRight(0)=0, hi=ssRight(1)=2(clamped), frac=0 → a[0]=1.0
     assert(wq(Seq(1.0 -> 0.5, 2.0 -> 0.25, 3.0 -> 0.25), 0.5).get == 1.0)
+  }
+
+  /** The estimator before value compaction, literally: every masked-in
+    * pair kept in input order, a boxed stable argsort, a per-pair cumsum. */
+  private def reference(pairs: Seq[(Option[Double], Option[Double])],
+      q: Double): Option[Double] = {
+    val kept = pairs.collect {
+      case (Some(v), Some(w)) if !v.isNaN && !w.isNaN => (v, w)
+    }
+    val n = kept.length
+    if (n == 0) return None
+    val vs = kept.map(_._1).toArray
+    val ws = kept.map(_._2).toArray
+    val idx = Array.range(0, n).sortBy(vs(_))
+    val ecdf = new Array[Double](n)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += ws(idx(i)); ecdf(i) = acc; i += 1 }
+    val p = q * (acc - 1.0)
+    def ssRight(key: Double): Int = {
+      var lo = 0; var hi = n
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (ecdf(mid) <= key) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    val lo = math.min(ssRight(p), n - 1)
+    val hi = math.min(ssRight(p + 1.0), n - 1)
+    val fHi = p - math.floor(p)
+    Some(vs(idx(lo)) * (1.0 - fHi) + vs(idx(hi)) * fHi)
+  }
+
+  // random groups: ties (values from a small set, −0.0 beside 0.0),
+  // continuous values, zero / integer / dyadic weights, null and NaN on
+  // both sides, a fully-masked group, an all-zero-weight group, a singleton
+  private lazy val groups: Map[String, Seq[(Option[Double], Option[Double])]] = {
+    val rnd = new scala.util.Random(2024)
+    val ties = Array(-3.5, -1.0, -0.0, 0.0, 1.0, 2.25, 7.0)
+    def hole(x: => Double): Option[Double] = rnd.nextInt(16) match {
+      case 0 => None
+      case 1 => Some(Double.NaN)
+      case _ => Some(x)
+    }
+    val random = (0 until 12).map { g =>
+      val continuous = g % 3 == 0
+      s"r$g" -> Seq.fill(rnd.nextInt(120) + 1)((
+        hole(if (continuous) rnd.nextGaussian() * 100 else ties(rnd.nextInt(ties.length))),
+        hole(if (g % 2 == 0) rnd.nextInt(5).toDouble else rnd.nextInt(17) / 8.0)))
+    }
+    (random ++ Seq(
+      "masked" -> Seq((None, Some(1.0)), (Some(Double.NaN), Some(2.0)),
+        (Some(3.0), None), (Some(4.0), Some(Double.NaN))),
+      "zero" -> Seq(3.0, 1.0, 2.0, 1.0).map(v => (Some(v), Some(0.0))),
+      "one" -> Seq((Some(5.5), Some(0.25))))).toMap
+  }
+
+  private val testQs = Seq(0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0)
+
+  test("value-compacted state equals the pair-buffer reference under any partitioning") {
+    val df = groups.toSeq.flatMap { case (g, ps) => ps.map { case (v, w) => (g, v, w) } }
+      .toDF("g", "v", "w")
+    val want = groups.map { case (g, ps) => g -> testQs.map(reference(ps, _)) }
+    for (part <- Seq(df.repartition(8), df.coalesce(1))) {
+      val scalar = part.groupBy("g").agg(
+        WeightedQuantile(col("v"), col("w"), testQs.head),
+        testQs.tail.map(q => WeightedQuantile(col("v"), col("w"), q)): _*).collect()
+      val fused = part.groupBy("g")
+        .agg(WeightedQuantile(col("v"), col("w"), testQs)).collect()
+      assert(scalar.length == groups.size && fused.length == groups.size)
+      scalar.foreach { r =>
+        val got = testQs.indices.map(i => Option(r.get(i + 1)).map(_.asInstanceOf[Double]))
+        assert(got == want(r.getString(0)), r.getString(0))
+      }
+      fused.foreach { r =>
+        val got = Option(r.getSeq[Double](1)).map(_.map(Option(_)))
+          .getOrElse(testQs.map(_ => None))
+        assert(got == want(r.getString(0)), r.getString(0))
+      }
+    }
+  }
+
+  test("SQL weighted_quantile still returns the reference double") {
+    graft.GraftFunctions.register(spark)
+    groups.toSeq.flatMap { case (g, ps) => ps.map { case (v, w) => (g, v, w) } }
+      .toDF("g", "v", "w").repartition(8).createOrReplaceTempView("t_wq_ref")
+    val out = spark.sql(
+      "SELECT g, weighted_quantile(v, w, 0.75) AS q FROM t_wq_ref GROUP BY g")
+    assert(out.schema("q").dataType == org.apache.spark.sql.types.DoubleType)
+    out.collect().foreach { r =>
+      assert(Option(r.get(1)) == reference(groups(r.getString(0)), 0.75), r.getString(0))
+    }
   }
 
   test("distributed merge equals single-partition result") {
