@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.expressions.{Cast, ElementAt, Literal}
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import graft.agg.{ApproxWeightedQuantile, MajorAgg, WeightedQuantile}
@@ -40,8 +40,10 @@ object GraftFunctions {
     val registry = spark.sessionState.functionRegistry
     registry.createOrReplaceTempFunction("weighted_quantile", exprs => {
       require(exprs.length == 3, "weighted_quantile(value, weight, q)")
-      WeightedQuantile(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
-        Seq(literalDouble(exprs(2))))
+      // the aggregate returns array<double>; its one element is the result
+      ElementAt(WeightedQuantile(Cast(exprs(0), DoubleType),
+        Cast(exprs(1), DoubleType), Seq(literalDouble(exprs(2))))
+        .toAggregateExpression(), Literal(1))
     }, "built-in")
     registry.createOrReplaceTempFunction("approx_weighted_quantile", exprs => {
       require(exprs.length == 3 || exprs.length == 4,

@@ -49,19 +49,21 @@ object Breakdown {
         .distinct()
         .orderBy(keys.map(r => col(r.outName)): _*)
     }
-    // FUSION: n ≥ 2 exact-quantile ops on the same variable AND the same
-    // weight set become ONE aggregate over an array of q's —
-    // `percentile(x, array(q…))` unweighted, `WeightedQuantile(x, w, q…)`
-    // weighted. Both keep one map per group (value → count / summed
-    // weight): five separate q1/q2/q3/p10/p90 aggregates buffer (and
-    // serialize, merge and sort) the column five times; the array form does
-    // it once (q04: 6.1 s → one-buffer cost; the reserves quant spec's
-    // weighted q1/q2/q3 read one map instead of three). Results are
-    // identical: the same interpolation on the same state, element-projected
-    // back per alias. The key is (variable, the existing weight columns the
-    // op multiplies, in spec order): pNN ignores weights, so it keys with
-    // the unweighted q's; a weighted and an unweighted q, or two weight
-    // sets, never share a buffer.
+    // FUSION: every exact-quantile op (q1/q2/q3, pNN) is keyed by (variable,
+    // the existing weight columns the op multiplies, in spec order), and
+    // each key becomes ONE aggregate over the array of its q's —
+    // `percentile(x, array(q…))` unweighted (pandas linear interpolation ≡
+    // Spark percentile, bm_breakdown.py:241-242), `WeightedQuantile(x, w,
+    // q…)` weighted — read back per alias by `element_at`. Both keep one map
+    // per group (value → count / summed weight): five separate
+    // q1/q2/q3/p10/p90 aggregates would buffer (and serialize, merge and
+    // sort) the column five times; the array form does it once (q04: 6.1 s
+    // → one-buffer cost; the reserves quant spec's weighted q1/q2/q3 read
+    // one map instead of three). A key with one q takes the same path at
+    // the same cost. Results are identical: the same interpolation on the
+    // same state. pNN ignores weights, so it keys with the unweighted q's;
+    // a weighted and an unweighted q, or two weight sets, never share a
+    // buffer.
     val colsSet = df.columns.toSet
     def exactQuantile(r: SpecRow): Option[((String, Seq[String]), Double)] =
       if (r.op == "text" || !colsSet.contains(r.variable)) None
@@ -73,20 +75,18 @@ object Breakdown {
         case _ => None
       }
     val quantRows = aggs0.flatMap(exactQuantile)
-    val fusedKeys = quantRows.map(_._1).distinct
-      .filter(key => quantRows.count(_._1 == key) >= 2)
-    val fusedQs = fusedKeys.map(key =>
+    val quantKeys = quantRows.map(_._1).distinct
+    val quantQs = quantKeys.map(key =>
       key -> quantRows.filter(_._1 == key).map(_._2).distinct.sorted).toMap
     def fusedOf(r: SpecRow): Option[(String, Int)] =
-      exactQuantile(r).flatMap { case (key, q) =>
-        val i = fusedKeys.indexOf(key)
-        if (i < 0) None else Some((s"_qfuse_$i", fusedQs(key).indexOf(q)))
+      exactQuantile(r).map { case (key, q) =>
+        (s"_qfuse_${quantKeys.indexOf(key)}", quantQs(key).indexOf(q))
       }
 
     val plainAggCols = aggs0.filter(fusedOf(_).isEmpty)
       .map(r => aggCol(df, r).as(r.outName))
-    val fusedAggCols = fusedKeys.zipWithIndex.map { case (key @ (v, wts), i) =>
-      val qs = fusedQs(key)
+    val fusedAggCols = quantKeys.zipWithIndex.map { case (key @ (v, wts), i) =>
+      val qs = quantQs(key)
       val agg =
         if (wts.isEmpty) percentile(masked(v), array(qs.map(lit): _*))
         else WeightedQuantile(masked(v), weightProduct(wts), qs)
@@ -146,6 +146,7 @@ object Breakdown {
   private def weightProduct(wts: Seq[String]): Column =
     wts.map(w => col(w).cast(DoubleType)).reduce(_ * _)
 
+  /** Every op but the exact quantiles, which `run` fuses per key. */
   private def aggCol(df: DataFrame, r: SpecRow): Column = {
     val cols = df.columns.toSet
     // weights are silently filtered to existing columns (bm_breakdown.py:199-203)
@@ -181,8 +182,6 @@ object Breakdown {
         val den = sum(when(x.isNotNull, w0).otherwise(lit(0.0)))
         val num = sum(when(x.isNotNull, x * w0).otherwise(lit(0.0)))
         when(den =!= 0.0, num / den)
-      case "q1" | "q2" | "q3" if wts.nonEmpty =>
-        WeightedQuantile(x, wprod, quartile(op))
       case "aq1" | "aq2" | "aq3" =>
         // beyond-reference: bounded-state quantile sketch for unbounded
         // groups (ApproxWeightedQuantile Scaladoc); weightless → w ≡ 1
@@ -215,11 +214,7 @@ object Breakdown {
       case "var" => var_samp(x) // pandas ddof=1
       case "std" => stddev_samp(x)
       case "sem" => stddev_samp(x) / sqrt(count(x)) // std/√n (ddof=1)
-      case "q1" | "q2" | "q3" =>
-        percentile(x, lit(quartile(op))) // pandas linear interpolation ≡ Spark percentile
       case "major" => MajorAgg(col(r.variable), df.schema(r.variable).dataType)
-      case p if isPercentile(p) =>
-        percentile(x, lit(p.drop(1).toDouble / 100.0)) // bm_breakdown.py:241-242
       case _ =>
         max(lit(null).cast(DoubleType)) // unknown op → null (v stays NaN)
     }

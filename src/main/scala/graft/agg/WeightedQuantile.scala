@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.element_at
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -122,35 +123,32 @@ object WQMap {
   * index with `ecdf > key` falls in the same run, so `searchsorted(right)`
   * picks the same value (zero-weight values keep their entry, so the
   * clamp and `p < 0` cases pick the same value too). With a negative
-  * weight the reference's own binary search runs over a non-monotone ecdf
-  * and this equivalence is not claimed. Floating point: a value's summed
-  * weight accumulates in merge order, as the reference's cumsum already
-  * did across equal values (its stable sort kept merge order). When every
-  * partial sum is exact in a double (integer or dyadic weights of modest
-  * size) the result is bit-identical under any partitioning.
+  * weight the reference's binary search runs over a non-monotone ecdf, and
+  * a tie whose weights cancel can pick another value (DEVIATIONS.md).
+  * Floating point: a value's summed weight accumulates in merge order, as
+  * the reference's cumsum already did across equal values (its stable sort
+  * kept merge order). When every partial sum is exact in a double
+  * (integer or dyadic weights of modest size) the result is bit-identical
+  * under any partitioning.
   *
-  * `qs` holds one or more quantiles evaluated over the ONE map: with
-  * `returnArray` the result is `array<double>` in `qs` order (the
-  * [[Breakdown]] fusion of q1/q2/q3 on one variable and weight set), else
-  * the double of the single q (Column and SQL `weighted_quantile`). For
-  * groups whose distinct count is unbounded see [[ApproxWeightedQuantile]].
+  * `qs` holds one or more quantiles evaluated over the ONE map; the result
+  * is `array<double>` in `qs` order (null for a fully-masked group). The
+  * [[Breakdown]] fusion reads each q back with `element_at`; the scalar
+  * Column API and SQL `weighted_quantile(v, w, q)` wrap a one-q aggregate
+  * the same way and return a double. For groups whose distinct count is
+  * unbounded see [[ApproxWeightedQuantile]].
   */
 case class WeightedQuantile(
     left: Expression,
     right: Expression,
     qs: Seq[Double],
-    returnArray: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[WQMap] with BinaryLike[Expression] {
 
-  require(qs.nonEmpty && (returnArray || qs.length == 1),
-    s"weighted_quantile: one q for a scalar result, got $qs")
-
   override def prettyName: String = "weighted_quantile"
   override def nullable: Boolean = true
-  override def dataType: DataType =
-    if (returnArray) ArrayType(DoubleType, containsNull = false) else DoubleType
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def createAggregationBuffer(): WQMap = WQMap.ofSize(0)
 
@@ -189,15 +187,14 @@ case class WeightedQuantile(
       }
       lo
     }
-    val out = qs.map { q =>
+    new GenericArrayData(qs.map { q =>
       val p = q * (acc - 1.0) // p = q·(Σw − 1) (bm_breakdown.py:161)
       // clamp lo defensively (reference relies on p < Σw for q ∈ [0,1], w ≥ 0)
       val lo = math.min(ssRight(p), n - 1)
       val hi = math.min(ssRight(p + 1.0), n - 1) // clamp (bm_breakdown.py:166)
       val fHi = p - math.floor(p)
       WQMap.valueOf(ks(lo)) * (1.0 - fHi) + WQMap.valueOf(ks(hi)) * fHi
-    }
-    if (returnArray) new GenericArrayData(out.toArray) else out.head
+    }.toArray)
   }
 
   override def serialize(buf: WQMap): Array[Byte] = {
@@ -226,19 +223,15 @@ case class WeightedQuantile(
 }
 
 object WeightedQuantile {
-  /** Column-level API: `weightedQuantile($"grade", $"w", 0.5)`. */
+  /** Column-level API: `weightedQuantile($"grade", $"w", 0.5)`, a double. */
   def apply(value: Column, weight: Column, q: Double): Column =
-    of(value, weight, Seq(q), returnArray = false)
+    element_at(apply(value, weight, Seq(q)), 1)
 
   /** Several quantiles from one buffer: `array<double>` in `qs` order. */
   def apply(value: Column, weight: Column, qs: Seq[Double]): Column =
-    of(value, weight, qs, returnArray = true)
-
-  private def of(value: Column, weight: Column, qs: Seq[Double],
-      returnArray: Boolean): Column =
     ExpressionUtils.column(
       WeightedQuantile(
         Cast(ExpressionUtils.expression(value), DoubleType),
         Cast(ExpressionUtils.expression(weight), DoubleType),
-        qs, returnArray).toAggregateExpression())
+        qs).toAggregateExpression())
 }

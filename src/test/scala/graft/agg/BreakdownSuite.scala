@@ -185,7 +185,7 @@ class BreakdownSuite extends AnyFunSuite {
     val fused = Breakdown(qdf.repartition(8),
       "k;v=a,q1,w1,w2;v=b,q2,w1,w2;v=c,q3,w1,w2;v=d,q2,w1,w2")
     val wqs = weightedQuantiles(fused)
-    assert(wqs.map(w => (w.qs, w.returnArray)) == Seq((Seq(0.25, 0.5, 0.75), true)))
+    assert(wqs.map(_.qs) == Seq(Seq(0.25, 0.5, 0.75)))
     val rows = fused.collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("g0", "g1", "g2"))
     for ((name, op) <- Seq("a" -> "q1", "b" -> "q2", "c" -> "q3", "d" -> "q2")) {
@@ -197,12 +197,22 @@ class BreakdownSuite extends AnyFunSuite {
   test("two weight sets, or a weighted and an unweighted q, never share a buffer") {
     val spec = "k;v=a,q1,w1;v=b,q3,w1;v=c,q1,w2;v=d,q3,w2;v=e,q2;v=f,p90,w1;v=g,q3,w1,w2"
     val out = Breakdown(qdf.repartition(8), spec)
-    // one array aggregate per weight set with ≥ 2 q's; the lone (w1, w2)
-    // q3 stays scalar; q2 and p90 (pNN ignores weights) fuse unweighted
+    // one aggregate per weight set, the lone (w1, w2) q3 included; q2 and
+    // p90 (pNN ignores weights) share one unweighted percentile array
     val wqs = weightedQuantiles(out)
-      .map(w => (w.right.references.map(_.name).toSeq.sorted, w.qs, w.returnArray))
-    assert(wqs.toSet == Set((Seq("w1"), Seq(0.25, 0.75), true),
-      (Seq("w2"), Seq(0.25, 0.75), true), (Seq("w1", "w2"), Seq(0.75), false)))
+      .map(w => (w.right.references.map(_.name).toSeq.sorted, w.qs))
+    assert(wqs.toSet == Set((Seq("w1"), Seq(0.25, 0.75)),
+      (Seq("w2"), Seq(0.25, 0.75)), (Seq("w1", "w2"), Seq(0.75))))
+    val percentiles = out.queryExecution.analyzed.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+        a.aggregateExpressions.flatMap(_.collect {
+          case p: org.apache.spark.sql.catalyst.expressions.aggregate.Percentile =>
+            p.percentageExpression.eval()
+              .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+              .toDoubleArray().toSeq
+        })
+    }.flatten
+    assert(percentiles == Seq(Seq(0.5, 0.9)))
     val rows = out.collect()
     for (cell <- spec.split(';').tail) {
       val name = cell.split(',')(0).split('=')(1)
@@ -321,6 +331,15 @@ class WeightedQuantileSuite extends AnyFunSuite {
         assert(got == want(r.getString(0)), r.getString(0))
       }
     }
+  }
+
+  test("negative weights: a tie whose weights cancel departs from the reference") {
+    // DEVIATIONS.md: values 1, 1, 2 with weights −2, 1, −2 (Σw = −3, p = −2
+    // at q = 0.5). The reference's ecdf [−2, −1, −3] is not monotone and its
+    // search lands on the first 1; the compacted ecdf [−1, −3] lands on 2
+    val pairs = Seq(1.0 -> -2.0, 1.0 -> 1.0, 2.0 -> -2.0)
+    assert(reference(pairs.map { case (v, w) => (Some(v), Some(w)) }, 0.5) == Some(1.0))
+    assert(wq(pairs, 0.5) == Some(2.0))
   }
 
   test("SQL weighted_quantile still returns the reference double") {
